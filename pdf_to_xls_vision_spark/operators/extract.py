@@ -60,7 +60,7 @@ EXTRACTION_SCHEMA = (
     "page_numbers array<string>"
 )
 
-_COLS = [
+EXTRACTION_COLS = [
     "doc_id", "page", "table_id", "media_ref",
     "grid", "quality", "rotation_corrected", "is_table",
     "page_numbers",
@@ -118,22 +118,27 @@ def _page_text(kind: str, text: str) -> str:
     return " ".join(w.get("t", "") for w in words)
 
 
-def _sentinel(doc_id: str, page: int, rot: int, page_numbers: list[str]) -> list:
-    return [doc_id, page, 0, "", None, [], rot, False, page_numbers]
+def _sentinel(
+    doc_id: str, page: int, rot: int, page_numbers: list[str], media_ref: str = ""
+) -> list:
+    return [doc_id, page, 0, media_ref, None, [], rot, False, page_numbers]
 
 
 def extract_text_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Text-path layout parse per page (table_extraction.py:402-474).
 
     Quality heuristics run per table here (T4); the document-level
-    retry decision is a later aggregate. Non-text spans inside a
-    text-routed document yield no tables — a scanned page gives
-    pdfplumber nothing, matching reference behavior.
+    retry decision is made later, in the per-document merge. Non-text
+    spans inside a text-routed document yield no tables — a scanned
+    page gives pdfplumber nothing, matching reference behavior. Each
+    page's sentinel carries the page's own ``media_ref`` and page
+    numbers, so a retried document's vision pass needs nothing else.
     """
     for batch in batches:
         out = []
-        for doc_id, page, kind, text in zip(
-            batch["doc_id"], batch["page"], batch["kind"], batch["text"]
+        for doc_id, page, kind, text, media_ref in zip(
+            batch["doc_id"], batch["page"], batch["kind"], batch["text"],
+            batch["media_ref"],
         ):
             page = int(page)
             # decode the payload ONCE per page; the word list feeds both
@@ -146,7 +151,11 @@ def extract_text_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
                 except Exception:
                     words = []
             page_text = " ".join(w.get("t", "") for w in words)
-            out.append(_sentinel(doc_id, page, 0, extract_numbers(page_text)))
+            out.append(
+                _sentinel(
+                    doc_id, page, 0, extract_numbers(page_text), media_ref or ""
+                )
+            )
             if not words:
                 continue
             # list-form kernels: the grid is already str|None cells, so
@@ -160,20 +169,77 @@ def extract_text_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
                     [doc_id, page, t_idx, "", encode_grid(header, rows),
                      issues, 0, True, []]
                 )
-        yield pd.DataFrame(out, columns=_COLS)
+        yield pd.DataFrame(out, columns=EXTRACTION_COLS)
 
 
-def make_vision_extractor(backend: VisionBackend | None = None):
-    """Build the vision-stage ``mapInPandas`` function.
+def vision_rows(
+    backend: VisionBackend,
+    doc_ids: list[str],
+    pages: list[int],
+    refs: list[str],
+    page_numbers: list[list[str]],
+) -> list[list]:
+    """The vision stage over a list of page images, as extraction rows
+    in ``EXTRACTION_COLS`` order: one sentinel per page, plus one table
+    row per page whose response parses to a non-empty grid.
 
-    One ``infer_batch`` call per Arrow batch — the batched-inference
+    One ``infer_batch`` call for all the pages — the batched-inference
     shape the north star requires (the reference makes one HTTPS call
     per page, table_extraction.py:46; a production backend would fan
     the batch out to an endpoint). Rotation detection + gated
     correction (image_processing.py:140-148,205-215) precedes
     inference; response parsing and cleaning follow
-    table_extraction.py:136-182 exactly.
+    table_extraction.py:136-182 exactly. ``page_numbers`` are the
+    pages' validation numbers (X2), computed by the caller.
     """
+    rotations = []
+    for ref in refs:
+        pixels, _expected = stub_pixels(ref)
+        _img, applied = correct_rotation(pixels)
+        rotations.append(1 if applied != 0 else 0)
+    responses = backend.infer_batch(refs)
+
+    out = []
+    for doc_id, page, ref, rot, csv, nums in zip(
+        doc_ids, pages, refs, rotations, responses, page_numbers
+    ):
+        out.append(_sentinel(doc_id, page, rot, nums))
+        # grid fast path first (csv.reader + proven dtype-inference
+        # mimicry, tests/test_vision_fastpath.py); content outside its
+        # grammar runs the spec pandas ladder, which stays the semantic
+        # definition
+        grid = parse_vision_grid_fast(csv)
+        if grid is VISION_FALLBACK:
+            df = parse_vision_csv(csv)
+            grid = None if df is None else _frame_payload(df)
+        if grid is None:
+            continue
+        # stringify once, then prune + clean on the grid: _stringify
+        # maps exactly the isna set to None, so the list-form prune_grid
+        # (rows-then-columns) reproduces dropna(how='all') twice at a
+        # fraction of the pandas frame cost; cleaning rules are identity
+        # on digit-only strings, so stringify-then-clean matches
+        # clean-then-stringify; uncleanable frames pass dirty, mirroring
+        # the reference's exception swallow
+        header, rows = grid
+        pruned = prune_grid([header, *rows])
+        if pruned is None:
+            continue
+        header, rows = pruned
+        if grid_cleanable(header):
+            rows = clean_vision_grid_rows(header, rows)
+        if not rows:
+            continue
+        out.append(
+            [doc_id, page, 1, ref, encode_grid(header, rows), [], 0, True, []]
+        )
+    return out
+
+
+def make_vision_extractor(backend: VisionBackend | None = None):
+    """Build the vision-route ``mapInPandas`` function: one
+    :func:`vision_rows` call per Arrow batch. A page without its own
+    ``media_ref`` is addressed as ``img://{doc_id}/{page}``."""
     backend = backend or VisionBackend()
 
     def extract_vision_pages(
@@ -186,52 +252,13 @@ def make_vision_extractor(backend: VisionBackend | None = None):
                 mr if mr else f"img://{d}/{p}"
                 for d, p, mr in zip(doc_ids, pages, batch["media_ref"])
             ]
-            rotations = []
-            for ref in refs:
-                pixels, _expected = stub_pixels(ref)
-                _img, applied = correct_rotation(pixels)
-                rotations.append(1 if applied != 0 else 0)
-            responses = backend.infer_batch(refs)
-            page_texts = [
-                _page_text(k, t) for k, t in zip(batch["kind"], batch["text"])
+            page_numbers = [
+                extract_numbers(_page_text(k, t))
+                for k, t in zip(batch["kind"], batch["text"])
             ]
-
-            out = []
-            for doc_id, page, ref, rot, csv, ptext in zip(
-                doc_ids, pages, refs, rotations, responses, page_texts
-            ):
-                out.append(_sentinel(doc_id, page, rot, extract_numbers(ptext)))
-                # grid fast path first (csv.reader + proven dtype-
-                # inference mimicry, tests/test_vision_fastpath.py);
-                # content outside its grammar runs the spec pandas
-                # ladder, which stays the semantic definition
-                grid = parse_vision_grid_fast(csv)
-                if grid is VISION_FALLBACK:
-                    df = parse_vision_csv(csv)
-                    grid = None if df is None else _frame_payload(df)
-                if grid is None:
-                    continue
-                # stringify once, then prune + clean on the grid:
-                # _stringify maps exactly the isna set to None, so the
-                # list-form prune_grid (rows-then-columns) reproduces
-                # dropna(how='all') twice at a fraction of the pandas
-                # frame cost; cleaning rules are identity on digit-only
-                # strings, so stringify-then-clean matches clean-then-
-                # stringify; uncleanable frames pass dirty, mirroring
-                # the reference's exception swallow
-                header, rows = grid
-                pruned = prune_grid([header, *rows])
-                if pruned is None:
-                    continue
-                header, rows = pruned
-                if grid_cleanable(header):
-                    rows = clean_vision_grid_rows(header, rows)
-                if not rows:
-                    continue
-                out.append(
-                    [doc_id, page, 1, ref, encode_grid(header, rows),
-                     [], 0, True, []]
-                )
-            yield pd.DataFrame(out, columns=_COLS)
+            yield pd.DataFrame(
+                vision_rows(backend, doc_ids, pages, refs, page_numbers),
+                columns=EXTRACTION_COLS,
+            )
 
     return extract_vision_pages

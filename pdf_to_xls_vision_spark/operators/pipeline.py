@@ -7,13 +7,15 @@ Shape (SURVEY.md §4.3)::
       -> posexplode(spans) -> pages                 (pages are the work unit)
       -> repartition(pages)                         (skew leveler: round-robin)
       -> [route=text]   mapInPandas(layout parse)   T1-T4, Q1-Q6
-      -> doc-level quality aggregate -> retry ids   R2 (converter.py:117-132)
-      -> [route=vision | retried] mapInPandas(vision stage)  V1-V7, C1-C3
+      -> [route=vision] mapInPandas(vision stage)   V1-V7, C1-C3
       -> unionByName
-      -> groupBy(doc_id).applyInPandas(merge + serialize)    M1 + A1/A3 + W1
+      -> repartition(doc_id) + sortWithinPartitions
+      -> mapInPandas(R2 retry + merge + serialize)  R2, M1 + A1/A3 + W1
 
-The merge and span serialization run inside the same per-document group
-the final shuffle already created, so M1 costs no extra exchange.
+Every page is parsed once. The R2 retry decision (converter.py:117-132),
+the retried document's vision pass, the merge and the span
+serialization all run inside the per-document group the final shuffle
+already created, so none of them costs an extra exchange.
 """
 
 from __future__ import annotations
@@ -22,8 +24,8 @@ import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+import numpy as np
 import pandas as pd
 
 from pdf_to_xls_vision_spark.core.merge import GridRecord, merge_grid_continuations
@@ -34,10 +36,12 @@ from pdf_to_xls_vision_spark.core.spans import (
 )
 from pdf_to_xls_vision_spark.operators.classify import route_expr
 from pdf_to_xls_vision_spark.operators.extract import (
+    EXTRACTION_COLS,
     EXTRACTION_SCHEMA,
     decode_grid,
     extract_text_pages,
     make_vision_extractor,
+    vision_rows,
 )
 from pdf_to_xls_vision_spark.core.vision import VisionBackend
 
@@ -63,7 +67,7 @@ _RAW_RESULT_SCHEMA = RESULT_SCHEMA.replace(
 )
 
 
-def _finish_result(raw: DataFrame, keep: list | None = None) -> DataFrame:
+def _finish_result(raw: DataFrame) -> DataFrame:
     """JVM-side restore of the public result schema from the raw merge
     output: parse spans_json into the typed span array (Jackson parse
     inside whole-stage codegen) and re-project the column order.
@@ -87,7 +91,6 @@ def _finish_result(raw: DataFrame, keep: list | None = None) -> DataFrame:
         "doc_id",
         F.from_json("spans_json", _SPANS_TYPE).alias("spans"),
         *scalars,
-        *(keep or []),
     )
 
 
@@ -144,19 +147,21 @@ def _doc_validation(page_number_lists, grids) -> dict:
 #: extraction-row columns the merge consumes (flat — nested-struct
 #: collect_list was measured 4x slower through Arrow->pandas; the
 #: table payload itself travels as the single JSON `grid` string, see
-#: operators/extract.EXTRACTION_SCHEMA for the measured rationale)
+#: operators/extract.EXTRACTION_SCHEMA for the measured rationale).
+#: ``has_issue`` is a table row's `quality` collapsed to "any issue"
+#: before the exchange, ``is_vision`` marks vision-routed rows.
 _MERGE_COLS = [
     "doc_id", "page", "table_id", "media_ref", "grid",
-    "rotation_corrected", "is_table", "page_numbers", "quality_retried",
+    "rotation_corrected", "is_table", "page_numbers", "has_issue",
+    "is_vision",
 ]
 
 
-def _merge_doc_arrays(cols: dict, s: int, e: int) -> dict:
+def _merge_doc_arrays(cols: dict, s: int, e: int, retried: int = 0) -> dict:
     """Per-document reduce over column-array slices [s:e): rebuild
     table records, M1-merge, serialize the ordered span sequence, and
     compute per-doc metrics."""
     is_table = cols["is_table"]
-    quality_retried = int(max(cols["quality_retried"][i] for i in range(s, e)))
     sent_idx = [i for i in range(s, e) if not is_table[i]]
     pages_parsed = len(sent_idx)
     rotation_corrections = int(
@@ -195,75 +200,71 @@ def _merge_doc_arrays(cols: dict, s: int, e: int) -> dict:
         "n_tables": len(merged),
         "pages_parsed": pages_parsed,
         "rotation_corrections": rotation_corrections,
-        "quality_retried": quality_retried,
+        "quality_retried": retried,
         "rollup_rows": int(rollups),
         "n_notes": int(notes),
         **validation,
     }
 
 
-#: dummy result row emitted for a document the merge kernel decides to
-#: send to the retry pass (single_parse strategy); every field but
-#: doc_id/needs_retry is discarded by the downstream filter
-_FLAG_ROW = {
-    "spans_json": "",
-    "n_tables": 0,
-    "pages_parsed": 0,
-    "rotation_corrections": 0,
-    "quality_retried": 0,
-    "rollup_rows": 0,
-    "n_notes": 0,
-    "validation_status": "",
-    "pdf_numbers": 0,
-    "table_numbers": 0,
-    "matched_numbers": 0,
-    "accuracy_pct": 0.0,
-    "n_missing": 0,
-    "n_extra": 0,
-    "needs_retry": 1,
-}
-
-#: extra columns the fold-retry merge kernel needs beyond _MERGE_COLS
-_FOLD_COLS = ["is_vision", "has_issue"]
+def _needs_retry(cols: dict, s: int, e: int) -> bool:
+    """R2 (converter.py:117-132) from the document's own rows: a
+    text-routed document is retried through vision when any of its
+    tables has a quality issue, or when it has no table at all."""
+    if cols["is_vision"][s]:
+        return False
+    has_table = False
+    for i in range(s, e):
+        if cols["has_issue"][i]:
+            return True
+        has_table = has_table or cols["is_table"][i]
+    return not has_table
 
 
-def _fold_merge_doc(cols: dict, s: int, e: int) -> dict:
-    """Single-parse retry fold: decide R2 (converter.py:117-132) from
-    the doc's own rows — any table-quality issue, or zero tables on a
-    text-routed doc — and short-circuit to a flag row instead of
-    merging; the retried doc's real result comes from the vision retry
-    pass."""
-    if not cols["is_vision"][s]:
-        has_table = False
-        for i in range(s, e):
-            if cols["has_issue"][i]:
-                return {**_FLAG_ROW, "doc_id": cols["doc_id"][s]}
-            has_table = has_table or cols["is_table"][i]
-        if not has_table:
-            return {**_FLAG_ROW, "doc_id": cols["doc_id"][s]}
-    d = _merge_doc_arrays(cols, s, e)
-    d["needs_retry"] = 0
-    return d
+def _merge_doc(backend: VisionBackend, cols: dict, s: int, e: int) -> dict:
+    """Merge one document, first re-extracting it through the vision
+    stage when R2 retries it. The retry runs over the document's page
+    sentinels, which carry each page's media_ref and validation
+    numbers, so it sees exactly the pages and numbers a vision-routed
+    document would."""
+    if not _needs_retry(cols, s, e):
+        return _merge_doc_arrays(cols, s, e)
+    doc_id = cols["doc_id"][s]
+    sent = sorted(
+        (i for i in range(s, e) if not cols["is_table"][i]),
+        key=lambda i: int(cols["page"][i]),
+    )
+    pages = [int(cols["page"][i]) for i in sent]
+    rows = vision_rows(
+        backend,
+        [doc_id] * len(sent),
+        pages,
+        [
+            cols["media_ref"][i] or f"img://{doc_id}/{p}"
+            for i, p in zip(sent, pages)
+        ],
+        [cols["page_numbers"][i] for i in sent],
+    )
+    retry_cols = {
+        c: [r[j] for r in rows] for j, c in enumerate(EXTRACTION_COLS)
+    }
+    return _merge_doc_arrays(retry_cols, 0, len(rows), retried=1)
 
 
-def _merge_frame(
-    b: pd.DataFrame, kernel=_merge_doc_arrays, extra_cols: list | None = None
-) -> pd.DataFrame:
+def _merge_frame(b: pd.DataFrame, backend: VisionBackend) -> pd.DataFrame:
     """Merge every complete document group in one pandas frame whose
     rows are contiguous by doc_id."""
-    import numpy as np
-
     ids = b["doc_id"].to_numpy()
     bounds = np.flatnonzero(ids[1:] != ids[:-1]) + 1
     starts = [0, *bounds.tolist()]
     ends = [*bounds.tolist(), len(ids)]
-    cols = {c: b[c].to_numpy() for c in _MERGE_COLS + (extra_cols or [])}
+    cols = {c: b[c].to_numpy() for c in _MERGE_COLS}
     return pd.DataFrame(
-        [kernel(cols, s, e) for s, e in zip(starts, ends)]
+        [_merge_doc(backend, cols, s, e) for s, e in zip(starts, ends)]
     )
 
 
-def _make_merge_partition(kernel=_merge_doc_arrays, extra_cols=None):
+def make_merge_partition(backend: VisionBackend | None = None):
     """Build the per-partition merge driver: rows arrive
     hash-partitioned by doc_id and sorted within the partition, so
     each document is a contiguous run — but Arrow batches don't
@@ -273,6 +274,7 @@ def _make_merge_partition(kernel=_merge_doc_arrays, extra_cols=None):
     its run ends. This replaces a groupBy().applyInPandas whose
     pandas-frame-per-group overhead (~13ms/doc x one frame per
     document) dominated the merge stage's executor time."""
+    backend = backend or VisionBackend()
 
     def _merge_partition(batches) -> pd.DataFrame:
         pending: pd.DataFrame | None = None
@@ -282,22 +284,17 @@ def _make_merge_partition(kernel=_merge_doc_arrays, extra_cols=None):
                 pending = None
             if len(b) == 0:
                 continue
-            import numpy as np
-
             ids = b["doc_id"].to_numpy()
             nz = np.flatnonzero(ids != ids[-1])
             start_last = int(nz[-1]) + 1 if len(nz) else 0
             pending = b.iloc[start_last:]
             body = b.iloc[:start_last]
             if len(body):
-                yield _merge_frame(body, kernel, extra_cols)
+                yield _merge_frame(body, backend)
         if pending is not None and len(pending):
-            yield _merge_frame(pending, kernel, extra_cols)
+            yield _merge_frame(pending, backend)
 
     return _merge_partition
-
-
-_merge_partition = _make_merge_partition()
 
 
 def explode_pages(docs: DataFrame, force_vision: bool = False) -> DataFrame:
@@ -325,10 +322,6 @@ def run_extraction(
     force_vision: bool = False,
     backend: VisionBackend | None = None,
     page_partitions: int | None = None,
-    persist_pages: bool = False,
-    persisted_sink: list | None = None,
-    merge_strategy: str = "map_batches",
-    retry_strategy: str = "reaggregate",
 ) -> DataFrame:
     """The full extraction pipeline; returns the result relation
     ``(doc_id, spans, …metrics)``.
@@ -349,228 +342,59 @@ def run_extraction(
     fully-level, core-sized work distribution for the expensive stage;
     revisit only if the input is pre-bucketed into core-sized files.
 
-    ``persist_pages``: the retry pass (R2) re-reads the text pages of
-    low-quality docs, and the parse output feeds both the retry
-    aggregate and the kept branch — persisting either
-    (MEMORY_AND_DISK) trades recompute for cache serialization.
-    Through round 3 (slower parse kernels) persisting won; after the
-    round-4 kernel vectorization the A/B FLIPPED — on the 8000-doc
-    corpus persist costs MORE executor time than the recompute it
-    saves (interleaved min-of-2 runs: no-persist 244/269 core-s vs
-    persist 411/302, wall 12.2/13.5s vs 18.0/13.6s), so the default
-    is now False. This is also the 100 TB-right default: recomputing
-    from the columnar scan beats caching the corpus. Pass True (or
-    "text_ext_only") to restore caching for retry-heavy workloads
-    with expensive parse backends.
-
-    ``persisted_sink``: callers that invoke this repeatedly (the
-    checkpointed commit loop, streaming micro-batches) pass a list to
-    receive the persisted DataFrames and MUST unpersist them after the
-    result is materialized — disk-backed cached blocks are not
-    LRU-evicted, so leaking one per micro-batch grows local disk
-    without bound.
-
-    ``retry_strategy``: how the R2 doc-level retry decision
-    (converter.py:117-132) is wired into the DAG.
-
-    - ``"reaggregate"`` (default): broadcast-anti/semi joins against a
-      separately aggregated retry-id relation; the anti-join's build
-      side re-executes the text parse (one extra full parse pass —
-      accumulator-verified 2x parse-input pages) unless
-      ``persist_pages`` caches it, but NOTHING is materialized.
-    - ``"single_parse"``: the retry decision is folded into the merge
-      kernel itself (the doc's rows are already co-located there), so
-      parse, vision, and merge each execute exactly once; the
-      doc-level merge output is persisted (MEMORY_AND_DISK) and fans
-      out to the kept-results filter and the retry-id filter.
-      Repeated callers (checkpoint loop, streaming) must pass
-      ``persisted_sink`` and unpersist after materializing.
-
-    Why recompute is the default (quiet-window measurements,
-    local[32]): at 8k docs single_parse wins narrowly (311 vs 355
-    exec core-s); at 32k docs it LOSES ~2x (1,957 vs 1,080) with
-    high variance (1,726-3,676 across runs, 500-1,000 GC-s) — the
-    cache fill + two cache scans of the span-payload result cost more
-    than the one parse pass they save, and the typed-span columnar
-    build allocation-storms the heap regardless of placement. Plain
-    reaggregate streams every stage with ~15 GC-s total and scales
-    linearly 8k->32k. Same lesson as ``persist_pages``: for
-    page/span-sized payloads, recompute from the scan beats any
-    materialization. Prefer single_parse only for small bounded
-    batches (hundreds of docs) where the cache is trivially small and
-    the saved parse pass is the larger term.
+    **Why R2 rides the merge exchange.** The per-document merge already
+    hash-partitions every extraction row by ``doc_id``, so each
+    document's rows meet in one task, where the retry decision
+    (converter.py:117-132) is a scan of those rows and a retried
+    document runs the vision stage on its own page sentinels before it
+    merges. The text parse and the vision route therefore execute once
+    each, with no retry-id aggregate, no semi/anti join, no cache and
+    no second exchange. The two shapes this replaced each paid for the
+    decision elsewhere: a separately aggregated retry-id relation
+    re-ran the whole text parse for its anti-join, and a cached
+    doc-level fan-out lost at 32k docs to cache pressure. On
+    perfbench's extract_batch workload (~320 stratified docs, local[4]
+    on a 4-core VM, ten alternating pairs against the retry-id
+    relation plan) this plan cut the median CPU time per pass from
+    23.7 to 16.4 CPU-s and wall time from 6.7 to 5.3 s; one traced run
+    went from 8 stages to 5, 15.8 to 8.0 executor-s and 4.4 to 3.4 MiB
+    shuffled, with the same vision page count. The trade-off: a
+    retried document's vision pages run in that document's single
+    merge task instead of spreading round-robin — about 1 s of stub
+    vision for the corpus's 800-page tail document, included in the
+    figures above.
     """
-    if merge_strategy not in ("apply_in_pandas", "map_batches"):
-        raise ValueError(
-            f"merge_strategy must be 'apply_in_pandas' or 'map_batches', "
-            f"got {merge_strategy!r}"
-        )
-    if retry_strategy not in ("single_parse", "reaggregate"):
-        raise ValueError(
-            f"retry_strategy must be 'single_parse' or 'reaggregate', "
-            f"got {retry_strategy!r}"
-        )
     spark = docs.sparkSession
     n_parts = page_partitions or spark.sparkContext.defaultParallelism * 2
-    vision_extractor = make_vision_extractor(backend)
-
-    persist_page_rel = persist_pages is True
-    persist_text_ext = bool(persist_pages)  # True or "text_ext_only"
+    backend = backend or VisionBackend()
 
     pages = explode_pages(docs, force_vision).repartition(n_parts)
-    if persist_page_rel:
-        pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_sink is not None:
-            persisted_sink.append(pages)
-
-    text_pages = pages.filter(F.col("route") == "text")
-    vision_pages = pages.filter(F.col("route") == "vision")
-
-    text_ext = text_pages.mapInPandas(extract_text_pages, EXTRACTION_SCHEMA)
-    if persist_text_ext:
-        # the parse output feeds BOTH the retry aggregate and the kept
-        # branch — persisting it halves the layout-parse UDF work (the
-        # single most expensive stage). At the 100 TB design point the
-        # same flag disables it: recompute beats caching the corpus.
-        text_ext = text_ext.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_sink is not None:
-            persisted_sink.append(text_ext)
-
-    # Per-doc reduce. Two equivalent strategies (identical kernels and
-    # output; A/B re-measured round 6 after the shuffle-writer fix):
-    # - map_batches (default since round 6): explicit hash repartition
-    #   to n_parts + in-partition sort + mapInPandas with cross-batch
-    #   group stitching. The explicit partition count keeps the
-    #   Python-bound merge at full parallelism — AQE's byte-based
-    #   coalescing shrank the applyInPandas exchange to 23 partitions
-    #   on the 8000-doc corpus (33 MB looks tiny to AQE, but the
-    #   stage cost is Python compute, not bytes). Interleaved min-of-
-    #   reps: 8.1-7.2s vs 9.6-10.0s wall.
-    # - apply_in_pandas: groupBy().applyInPandas with the same
-    #   array-based per-group kernel; subject to AQE coalescing.
-    def _apply_merge(
-        ext: DataFrame,
-        pre_partitioned: bool = False,
-        fold_retry: bool = False,
-    ) -> DataFrame:
-        kernel = _fold_merge_doc if fold_retry else _merge_doc_arrays
-        extra = _FOLD_COLS if fold_retry else []
-        schema = (
-            _RAW_RESULT_SCHEMA + ", needs_retry int"
-            if fold_retry
-            else _RAW_RESULT_SCHEMA
-        )
-        if merge_strategy == "apply_in_pandas":
-            def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                cols = {c: pdf[c].to_numpy() for c in _MERGE_COLS + extra}
-                return pd.DataFrame([kernel(cols, 0, len(pdf))])
-
-            return ext.groupBy("doc_id").applyInPandas(_merge_group, schema)
-        grouped = ext.select(*_MERGE_COLS, *extra)
-        if not pre_partitioned:
-            grouped = grouped.repartition(n_parts, "doc_id")
-        return grouped.sortWithinPartitions("doc_id").mapInPandas(
-            _make_merge_partition(kernel, extra), schema
-        )
-
-    # R2 — document-level retry: any quality issue on any table, or zero
-    # tables for the whole document (converter.py:117-132). Sentinel rows
-    # guarantee every text-routed doc appears in the aggregate.
-    if retry_strategy == "single_parse":
-        base_cols = [c for c in _MERGE_COLS if c != "quality_retried"]
-
-        def _fold_cols(ext: DataFrame, is_vision: bool) -> DataFrame:
-            # `quality` collapses to one boolean before the shuffle —
-            # the merge kernel's retry decision needs only "any issue
-            # on this table", so the exchange carries 1 bit instead of
-            # an array<string> per table row.
-            return ext.select(
-                *base_cols,
-                F.lit(0).alias("quality_retried"),
-                (F.col("is_table") & (F.size("quality") > 0)).alias(
-                    "has_issue"
-                ),
-                F.lit(is_vision).alias("is_vision"),
-            )
-
-        vision_ext = vision_pages.mapInPandas(
-            vision_extractor, EXTRACTION_SCHEMA
-        )
-        # Linear plan: parse + vision shuffle ONCE (the merge group's
-        # own doc_id exchange) into the fold-merge, whose kernel also
-        # makes the per-doc retry decision (flag row instead of a
-        # result). The doc-level output — ~1 row/doc of spans_json,
-        # output-scale not page-scale — is persisted and fans out to
-        # the kept-results filter and the retry-id filter.
-        #
-        # The persist is NOT optional sugar: every materialization-
-        # free formulation of "one computed relation, two consumers"
-        # was measured to re-execute the expensive subtree, because
-        # Spark's exchange reuse requires canonically IDENTICAL
-        # exchange subtrees and the optimizer makes the consumers
-        # differ: an anti-join gets pushed below the page exchange by
-        # PushDownLeftSemiAntiJoin; a flag filter over a doc-level
-        # repartition gets pushed below it by PushDownPredicates; and
-        # a JVM retry-aggregate reading the same page exchange gets
-        # COLUMN-PRUNED to 4 columns, so its exchange no longer
-        # matches the merge's full-width one (all three observed in
-        # executed plans with stage-attributed UDF row counts, see
-        # NOTES_ROUND4). Caching the small doc-level relation is the
-        # one formulation that runs parse, vision, and merge exactly
-        # once. In the checkpointed sink / streaming loops the cache
-        # is bucket-scoped and released via ``persisted_sink``.
-        #
-        # The cached relation is the FINISHED result (typed spans, via
-        # _finish_result BEFORE the persist), not the raw spans_json:
-        # the from_json parse then runs inside the merge stage, where
-        # the Python UDF's Arrow batching throttles its allocation
-        # rate (see _finish_result's placement note — parsing in the
-        # downstream cache-scan stage measured ~3x the executor time
-        # at 32k docs from GC alone). Flag rows carry spans_json="",
-        # which parses to null and is discarded by the kept filter.
-        merged = _finish_result(
-            _apply_merge(
-                _fold_cols(text_ext, False).unionByName(
-                    _fold_cols(vision_ext, True)
-                ),
-                fold_retry=True,
-            ),
-            keep=["needs_retry"],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_sink is not None:
-            persisted_sink.append(merged)
-        kept = merged.filter(F.col("needs_retry") == 0).drop("needs_retry")
-        retry_ids = merged.filter(F.col("needs_retry") == 1).select("doc_id")
-        retry_ext = (
-            text_pages.join(retry_ids, "doc_id", "left_semi")
-            .mapInPandas(vision_extractor, EXTRACTION_SCHEMA)
-            .withColumn("quality_retried", F.lit(1))
-            .select(*_MERGE_COLS)
-        )
-        return kept.unionByName(
-            _finish_result(_apply_merge(retry_ext, pre_partitioned=False))
-        )
-
-    doc_stats = text_ext.groupBy("doc_id").agg(
-        F.max(
-            F.when(F.col("is_table") & (F.size("quality") > 0), 1).otherwise(0)
-        ).alias("has_quality_issue"),
-        F.sum(F.when(F.col("is_table"), 1).otherwise(0)).alias("n_raw_tables"),
+    text_ext = pages.filter(F.col("route") == "text").mapInPandas(
+        extract_text_pages, EXTRACTION_SCHEMA
     )
-    retry_ids = doc_stats.filter(
-        (F.col("has_quality_issue") == 1) | (F.col("n_raw_tables") == 0)
-    ).select("doc_id")
-
-    text_kept = text_ext.join(retry_ids, "doc_id", "left_anti").withColumn(
-        "quality_retried", F.lit(0)
+    vision_ext = pages.filter(F.col("route") == "vision").mapInPandas(
+        make_vision_extractor(backend), EXTRACTION_SCHEMA
     )
-    retry_pages = text_pages.join(retry_ids, "doc_id", "left_semi")
-    retry_ext = retry_pages.mapInPandas(
-        vision_extractor, EXTRACTION_SCHEMA
-    ).withColumn("quality_retried", F.lit(1))
-    vision_ext = vision_pages.mapInPandas(
-        vision_extractor, EXTRACTION_SCHEMA
-    ).withColumn("quality_retried", F.lit(0))
 
-    all_ext = text_kept.unionByName(vision_ext).unionByName(retry_ext)
-    return _finish_result(_apply_merge(all_ext, pre_partitioned=False))
+    def _merge_input(ext: DataFrame, is_vision: bool) -> DataFrame:
+        # `quality` collapses to one boolean before the shuffle: the
+        # retry decision needs only "any issue on this table", so the
+        # exchange carries 1 bit instead of an array<string> per row
+        return ext.select(
+            *_MERGE_COLS[:-2],
+            (F.col("is_table") & (F.size("quality") > 0)).alias("has_issue"),
+            F.lit(is_vision).alias("is_vision"),
+        )
+
+    # The explicit partition count keeps the Python-bound merge at full
+    # parallelism: AQE's byte-based coalescing shrank a groupBy
+    # exchange to 23 partitions on the 8000-doc corpus (33 MB looks
+    # tiny to AQE, but the stage cost is Python compute, not bytes).
+    merged = (
+        _merge_input(text_ext, False)
+        .unionByName(_merge_input(vision_ext, True))
+        .repartition(n_parts, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .mapInPandas(make_merge_partition(backend), _RAW_RESULT_SCHEMA)
+    )
+    return _finish_result(merged)

@@ -151,43 +151,55 @@ def _commit_group(
 ) -> None:
     """Commit one bucket group: data (atomic per-bucket dynamic
     overwrite) then manifest (append). A crash between the two leaves
-    the bucket uncommitted and the rerun's overwrite is idempotent."""
+    the bucket uncommitted and the rerun's overwrite is idempotent.
+
+    The span write is the group's only execution of ``chunk``: the
+    manifest metrics are aggregated from a bucket-pruned read-back of
+    the files just written, because ``chunk`` is lazy and aggregating it
+    would re-run the whole extraction plan."""
     spark = chunk.sparkSession
+    spans_dir = _spans_dir(out_dir)
     (
         chunk.write.format("parquet")
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
-        .save(_spans_dir(out_dir))
+        .save(spans_dir)
     )
     now = int(time.time())
-    metrics = (
-        chunk.groupBy("bucket")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("pages_parsed").alias("pages_parsed"),
-            F.sum("n_tables").alias("tables_found"),
-            F.sum("rotation_corrections").alias("rotation_corrections"),
-            F.sum("quality_retried").alias("quality_retries"),
-            F.round(
-                F.avg(
-                    F.when(
-                        F.col("validation_status") == "completed",
-                        F.col("accuracy_pct"),
-                    )
-                ),
-                2,
-            ).alias("accuracy_pct"),
-        )
-        .withColumn(
-            "lineage",
-            F.struct(
-                F.lit(input_snapshot).alias("input_snapshot"),
-                F.lit(attempt).alias("attempt"),
-                F.lit(now).alias("committed_at_ts"),
-            ),
-        )
+    lineage = F.struct(
+        F.lit(input_snapshot).alias("input_snapshot"),
+        F.lit(attempt).alias("attempt"),
+        F.lit(now).cast("long").alias("committed_at_ts"),
     )
+    metrics = spark.createDataFrame([], MANIFEST_SCHEMA)
+    # a group with no docs writes no span files (on a fresh out_dir, no
+    # spans directory at all); the explicit schema reads a directory
+    # without parquet files as empty
+    if not _path_missing(spark, spans_dir):
+        metrics = (
+            spark.read.schema(chunk.schema)
+            .parquet(spans_dir)
+            .where(F.col("bucket").isin(group))
+            .groupBy("bucket")
+            .agg(
+                F.count("*").alias("docs"),
+                F.sum("pages_parsed").alias("pages_parsed"),
+                F.sum("n_tables").alias("tables_found"),
+                F.sum("rotation_corrections").alias("rotation_corrections"),
+                F.sum("quality_retried").alias("quality_retries"),
+                F.round(
+                    F.avg(
+                        F.when(
+                            F.col("validation_status") == "completed",
+                            F.col("accuracy_pct"),
+                        )
+                    ),
+                    2,
+                ).alias("accuracy_pct"),
+            )
+            .withColumn("lineage", lineage)
+        )
     # buckets with zero docs still need a manifest row to count as done
     present = {r.bucket for r in metrics.select("bucket").collect()}
     missing = [b for b in group if b not in present]
@@ -245,19 +257,9 @@ def run_checkpointed_extraction(
                 f"simulated failure before group {g_idx} (committed {committed})"
             )
         sub = bucketed_docs.filter(F.col("bucket").isin(group)).drop("bucket")
-        persisted: list = []
-        result = run_extraction(
-            sub,
-            force_vision=force_vision,
-            backend=backend,
-            persisted_sink=persisted,
-        )
+        result = run_extraction(sub, force_vision=force_vision, backend=backend)
         chunk = with_bucket(result, n_buckets)
         _commit_group(chunk, group, out_dir, input_snapshot, attempt)
-        # each group's cache is consumed exactly once — release it so a
-        # many-group backfill doesn't accumulate disk-backed blocks
-        for df in persisted:
-            df.unpersist()
         committed.extend(group)
 
     return {"committed": committed, "skipped": sorted(already), "attempt": attempt}

@@ -57,8 +57,7 @@ def _commit_micro_batch(
     input_snapshot: str,
     backend=None,
 ) -> None:
-    persisted: list = []
-    result = run_extraction(batch_df, backend=backend, persisted_sink=persisted)
+    result = run_extraction(batch_df, backend=backend)
     chunk = with_bucket(result, n_buckets).withColumn(
         "ingest_batch", F.lit(batch_id).cast("long")
     )
@@ -72,13 +71,11 @@ def _commit_micro_batch(
     # Aggregate the manifest metrics from the parquet JUST WRITTEN, not
     # from `chunk`: the extraction plan is lazy, so `chunk.groupBy`
     # would re-execute the whole UDF pipeline a second time per
-    # micro-batch (with persist_pages=False nothing is cached — this
-    # exact re-execution was the dominant per-batch fixed cost behind
-    # the 47-vs-451 docs/sec streaming gap in BENCH_r03). The read-back
-    # is a column-pruned scan of the five small metric columns of this
-    # batch's partition only; the data is identical by construction.
-    for df in persisted:  # the spans write was the only plan execution
-        df.unpersist()
+    # micro-batch (this exact re-execution was the dominant per-batch
+    # fixed cost behind the 47-vs-451 docs/sec streaming gap in
+    # BENCH_r03). The read-back is a column-pruned scan of the five
+    # small metric columns of this batch's partition only; the data is
+    # identical by construction.
     spark = batch_df.sparkSession
     batch_part = os.path.join(
         _spans_dir(out_dir), f"ingest_batch={batch_id}"

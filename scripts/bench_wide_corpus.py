@@ -12,9 +12,9 @@ suffix the wide layout cannot carry — corpus.py docstring):
 - wide:   col_range=(28, 48) -> 30-50 total columns per table
 
 For each: warmup 1 then best-of-``--reps`` wall + executorRunTime
-delta of ``run_extraction`` (fresh plan + unpersist per rep, the
-bench.py thunk protocol), plus docs/sec and an exact total-cell count
-from the result spans. One JSON line on stdout.
+delta of ``run_extraction`` (fresh plan per rep), plus docs/sec and
+an exact total-cell count from the result spans. One JSON line on
+stdout.
 
 Correctness on the wide shape is pinned by
 tests/test_e2e_spans.py::test_wide_corpus_spans_equal_oracle (byte
@@ -78,14 +78,10 @@ def main() -> None:
         corpus = spark.read.parquet(path)
 
         def once():
-            sink: list = []
-            res = run_extraction(corpus, persisted_sink=sink)
+            res = run_extraction(corpus)
             t0 = time.time()
             res.count()
-            w = time.time() - t0
-            for c in sink:
-                c.unpersist(blocking=True)
-            return w
+            return time.time() - t0
 
         once()  # warmup (JIT + first scan)
         walls, execs = [], []
@@ -95,8 +91,7 @@ def main() -> None:
             execs.append((_executor_ms(spark) - e0) / 1000.0)
         # exact table-cell volume from the result spans (one extra run,
         # unmeasured): table_start text is "page:order:RxC"
-        sink: list = []
-        res = run_extraction(corpus, persisted_sink=sink)
+        res = run_extraction(corpus)
         cells = (
             res.select(F.explode("spans").alias("s"))
             .where(F.col("s.kind") == "table_start")
@@ -113,8 +108,6 @@ def main() -> None:
             .agg(F.sum("n"))
             .first()[0]
         )
-        for c in sink:
-            c.unpersist(blocking=True)
         spark.catalog.clearCache()
         out[label] = {
             "wall_sec": round(min(walls), 2),

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Profile the merge/serialize kernel and the vision-page kernel
-standalone (no Spark) — the two dominant executor-cost stages per
-scripts/profile_stage_breakdown.py. Usage:
+"""Profile the merge/serialize kernel (which also runs the R2 retry's
+vision pass) and the vision-page kernel standalone (no Spark) — the two
+dominant executor-cost stages per scripts/profile_stage_breakdown.py.
+Usage:
 
     python scripts/profile_merge_vision.py [n_docs] [--cprofile merge|vision]
 """
@@ -24,7 +25,7 @@ from pdf_to_xls_vision_spark.operators.extract import (
     make_vision_extractor,
 )
 from pdf_to_xls_vision_spark.operators.classify import route_expr  # noqa: F401
-from pdf_to_xls_vision_spark.operators.pipeline import _merge_frame
+from pdf_to_xls_vision_spark.operators.pipeline import make_merge_partition
 
 
 def build_pages(n_docs: int) -> pd.DataFrame:
@@ -94,8 +95,9 @@ def main() -> None:
         )
 
     text_ext = run_text()
-    for df in (text_ext, vis_ext):
-        df["quality_retried"] = 0
+    for df, is_vision in ((text_ext, False), (vis_ext, True)):
+        df["has_issue"] = df["is_table"] & (df["quality"].map(len) > 0)
+        df["is_vision"] = is_vision
 
     merged_in = (
         pd.concat([text_ext, vis_ext], ignore_index=True)
@@ -104,8 +106,10 @@ def main() -> None:
     )
     print(f"merge input: {len(merged_in)} extraction rows")
 
+    merge_fn = make_merge_partition()
+
     def run_merge():
-        return _merge_frame(merged_in)
+        return pd.concat(list(merge_fn(iter([merged_in]))), ignore_index=True)
 
     run_merge()  # warm
     if prof_target == "merge":

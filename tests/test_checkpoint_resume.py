@@ -142,3 +142,34 @@ def test_input_pruned_resume_matches_full_run(spark, tiny_corpus_path, result_df
     assert _span_set(read_committed(spark, clean_dir)) == _span_set(result_df.select(
         "doc_id", "spans"
     ))
+
+
+def test_commit_group_with_empty_bucket(spark, tiny_corpus_path, tmp_path):
+    """Commit groups whose buckets hold no docs — the first ones before
+    any spans directory exists — write manifest rows of the same types
+    as groups full of docs, so a full-row manifest read succeeds."""
+    from pdf_to_xls_vision_spark.sink.checkpoint import (
+        run_checkpointed_extraction,
+        with_bucket,
+    )
+
+    n_buckets = 4
+    docs = spark.read.parquet(tiny_corpus_path)
+    by_bucket = {}
+    for r in with_bucket(docs, n_buckets).select("doc_id", "bucket").collect():
+        by_bucket.setdefault(r.bucket, []).append(r.doc_id)
+    picked = sorted(by_bucket[2])[:3] + sorted(by_bucket[3])[:3]
+    sub = docs.where(F.col("doc_id").isin(picked))
+
+    out_dir = str(tmp_path / "sparse")
+    out = run_checkpointed_extraction(
+        sub, out_dir, n_buckets=n_buckets, commit_group_size=1
+    )
+    assert out["committed"] == [0, 1, 2, 3]
+
+    rows = read_manifest(spark, out_dir).collect()
+    assert sorted(r.bucket for r in rows) == [0, 1, 2, 3]
+    assert sum(r.docs for r in rows) == len(picked)
+    assert {r.bucket: r.docs for r in rows}[0] == 0
+    committed = read_committed(spark, out_dir).select("doc_id").collect()
+    assert sorted(r.doc_id for r in committed) == sorted(picked)
